@@ -75,13 +75,6 @@ object Main {
     }
   }
 
-  /** Reference error wording for bad dates (handler.py via StacJobs). */
-  private def parseDate(s: String): java.time.LocalDate =
-    try java.time.LocalDate.parse(s) catch {
-      case _: Exception => throw new IllegalArgumentException(
-        s"Invalid date format: $s. Expected ISO format (YYYY-MM-DD)")
-    }
-
   private def cacheDailyLinks(spark: SparkSession, pos: Seq[String],
                               flags: Map[String, String]): Unit = {
     val catalogDir = flags.getOrElse("--catalog-dir",
@@ -94,20 +87,9 @@ object Main {
       case None =>
         if (pos.length < 3) throw new IllegalArgumentException(
           "cache-daily-links needs <collection> <date> <dest>")
-        val bbox = flags.get("--bounding-box").map { s =>
-          val p = s.split(",").map(_.trim.toDouble)
-          if (p.length != 4) throw new IllegalArgumentException(
-            s"Invalid bounding_box: expected 4 values, got ${p.length}")
-          (p(0), p(1), p(2), p(3))
-        }
-        val protocol = flags.getOrElse("--protocol", "https")
-        if (protocol != "s3" && protocol != "https")
-          throw new IllegalArgumentException(
-            s"Invalid protocol: $protocol. Must be 's3' or 'https'")
-        StacJobs.CacheDailyRequest(
-          HlsCollections.byName(pos(0)),
-          parseDate(pos(1)).toString,
-          Some(pos(2)), bbox, protocol,
+        StacJobs.cacheDailyRequest(pos(0), pos(1), Some(pos(2)),
+          flags.get("--bounding-box").map(_.split(",").map(_.trim.toDouble).toSeq),
+          flags.getOrElse("--protocol", "https"),
           flags.contains("--skip-existing"))
     }
     val dest = req.dest.getOrElse(
@@ -125,7 +107,7 @@ object Main {
       "write-monthly-geoparquet needs <collection> <yearmonth> <dest>")
     val collection = HlsCollections.byName(pos(0))
     // YYYY-MM-DD, day ignored (write.py:104-106)
-    val ym = parseDate(pos(1))
+    val ym = StacJobs.parseDate(pos(1))
     val wrote = StacPipeline.writeMonthlyStacGeoparquet(
       spark, pos(2), collection.collectionId, ym.getYear, ym.getMonthValue,
       version = flags.getOrElse("--version", "0.1"),

@@ -1,6 +1,9 @@
 package graft.stac
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.time.{LocalDate, YearMonth}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's two top-level verbs (cli.py) as library functions —
@@ -15,13 +18,71 @@ import org.apache.spark.sql.functions._
   *
   * `writeMonthlyStacGeoparquet` (write.py:101-247): read a month of
   * cached links (partition pruning does the month filter), optionally
-  * require completeness, spatially sort by Hilbert index, write the
-  * monthly zstd parquet.
+  * require completeness, and write the month through
+  * [[StacWrite.writeMonthly]].
+  *
+  * Completeness has one rule (write.py:158-189): every expected day of
+  * the month has a committed daily cache. A day with zero granules
+  * counts, because its cache commits like any other. In a collection's
+  * origin month the expected days start on the origin day.
   */
 object StacPipeline {
 
   /** Daily link cache root (mirrors LINK_PATH_PREFIX, constants.py:6). */
   def linksRoot(dest: String): String = s"$dest/links"
+
+  /** One day's link cache, `links/collection=…/year=…/month=…/day=…`.
+    * `day` is a day of the month, or `*` to glob the month's days.
+    */
+  private def linkDayPath(dest: String, collectionId: String, year: Int,
+                          month: Int, day: String): String =
+    s"${linksRoot(dest)}/collection=$collectionId/year=$year/month=$month/day=$day"
+
+  private def linkDayPath(dest: String, collectionId: String,
+                          day: LocalDate): String =
+    linkDayPath(dest, collectionId, day.getYear, day.getMonthValue,
+      day.getDayOfMonth.toString)
+
+  /** A write committed only when Spark's `_SUCCESS` marker is there: a
+    * crashed Overwrite leaves just `_temporary/` behind.
+    */
+  private def successMarker(dir: String): String = s"$dir/_SUCCESS"
+
+  /** Whether `day`'s link cache is committed — the skip-existing test. */
+  private def isCached(spark: SparkSession, dest: String,
+                       collectionId: String, day: LocalDate): Boolean =
+    StacWrite.exists(spark, successMarker(linkDayPath(dest, collectionId, day)))
+
+  /** Days of the month whose link cache is committed, from one glob. */
+  private def cachedDays(spark: SparkSession, dest: String,
+                         collectionId: String, year: Int, month: Int): Set[Int] = {
+    val glob = new Path(
+      successMarker(linkDayPath(dest, collectionId, year, month, "*")))
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(glob)).toSeq.flatten
+      .map(_.getPath.getParent.getName.stripPrefix("day=").toInt).toSet
+  }
+
+  /** The catalog rows cached for one collection-day: the closed window
+    * [day 00:00:00, day 23:59:59] (links.py:104-106), the optional bbox,
+    * and `stac_link`, the first `protocol` stac.json link; rows without
+    * one are dropped.
+    */
+  private def dayLinks(catalog: DataFrame, collectionId: String, date: String,
+                       bbox: Option[(Double, Double, Double, Double)],
+                       protocol: String): DataFrame = {
+    val inDay = col("collection") === collectionId &&
+      col("ts") >= lit(s"$date 00:00:00").cast("timestamp") &&
+      col("ts") <= lit(s"$date 23:59:59").cast("timestamp")
+    val inBbox = bbox.fold(lit(true): Column) { case (w, s, e, n) =>
+      Validation.validateBbox(w, s, e, n)
+      col("lon") >= w && col("lon") <= e && col("lat") >= s && col("lat") <= n
+    }
+    catalog.filter(inDay && inBbox)
+      .withColumn("stac_link",
+        graft.functions.first_link(col("links"), protocol, "stac.json"))
+      .filter(col("stac_link").isNotNull)
+  }
 
   def cacheDailyStacJsonLinks(
       spark: SparkSession,
@@ -32,27 +93,11 @@ object StacPipeline {
       bbox: Option[(Double, Double, Double, Double)] = None,
       protocol: String = "https",
       skipExisting: Boolean = false): Boolean = {
-    import spark.implicits._
-    val day = java.time.LocalDate.parse(date)
-    val outPath = s"${linksRoot(dest)}/collection=$collectionId/" +
-      s"year=${day.getYear}/month=${day.getMonthValue}/day=${day.getDayOfMonth}"
-    if (skipExisting && StacWrite.exists(spark, outPath)) return false
-
-    val dayStart = s"$date 00:00:00"
-    val dayEnd = s"$date 23:59:59" // closed [start, start+1d-1s], links.py:104-106
-    var q = catalog
-      .filter($"collection" === collectionId)
-      .filter($"ts" >= lit(dayStart).cast("timestamp") &&
-        $"ts" <= lit(dayEnd).cast("timestamp"))
-    bbox.foreach { case (w, s, e, n) =>
-      Validation.validateBbox(w, s, e, n)
-      q = q.filter($"lon" >= w && $"lon" <= e && $"lat" >= s && $"lat" <= n)
-    }
-    q.withColumn("stac_link",
-        graft.functions.first_link($"links", protocol, "stac.json"))
-      .filter($"stac_link".isNotNull)
-      .select($"granule_id", $"stac_link", $"lon", $"lat", $"ts")
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
+    val day = LocalDate.parse(date)
+    if (skipExisting && isCached(spark, dest, collectionId, day)) return false
+    dayLinks(catalog, collectionId, date, bbox, protocol)
+      .select("granule_id", "stac_link", "lon", "lat", "ts")
+      .write.mode(SaveMode.Overwrite).parquet(linkDayPath(dest, collectionId, day))
     true
   }
 
@@ -67,30 +112,24 @@ object StacPipeline {
     */
   def writeDailyLinksJsonArray(
       spark: SparkSession,
-      catalog: org.apache.spark.sql.DataFrame,
+      catalog: DataFrame,
       dest: String,
       collectionId: String,
       date: String,
       protocol: String = "https"): String = {
     import spark.implicits._
-    val day = java.time.LocalDate.parse(date)
-    val links = catalog
-      .filter($"collection" === collectionId)
-      .filter($"ts" >= lit(s"$date 00:00:00").cast("timestamp") &&
-        $"ts" <= lit(s"$date 23:59:59").cast("timestamp"))
-      .withColumn("stac_link",
-        graft.functions.first_link($"links", protocol, "stac.json"))
-      .filter($"stac_link".isNotNull)
+    val day = LocalDate.parse(date)
+    val links = dayLinks(catalog, collectionId, date, None, protocol)
       .select($"stac_link").orderBy($"stac_link")
       .as[String].collect()
     val path = f"$dest/${HlsCollections.linkPath(collectionId,
       day.getYear, day.getMonthValue, day.getDayOfMonth)}"
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try {
-      val json = links.map(l =>
-        "\"" + l.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+      // json.dumps' separators, each string escaped by Jackson
+      val json = links.map(StacJobs.mapper.writeValueAsString)
         .mkString("[", ", ", "]")
       out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } finally out.close()
@@ -105,11 +144,10 @@ object StacPipeline {
   def dateRange(collection: HlsCollections.Collection,
                 startDate: Option[String] = None,
                 endDate: Option[String] = None,
-                today: java.time.LocalDate = java.time.LocalDate.now())
+                today: LocalDate = LocalDate.now())
       : Seq[String] = {
-    val start = java.time.LocalDate.parse(
-      startDate.getOrElse(collection.originDate))
-    val end = endDate.map(java.time.LocalDate.parse)
+    val start = LocalDate.parse(startDate.getOrElse(collection.originDate))
+    val end = endDate.map(LocalDate.parse)
       .getOrElse(today.minusDays(1))
     require(!start.isAfter(end), s"start_date $start after end_date $end")
     Iterator.iterate(start)(_.plusDays(1))
@@ -145,15 +183,12 @@ object StacPipeline {
       protocol: String = "https",
       pageSize: Int = 2000,
       skipExisting: Boolean = false): Boolean = {
-    import spark.implicits._
-    val day = java.time.LocalDate.parse(date)
-    val outPath = s"${linksRoot(dest)}/collection=$collectionId/" +
-      s"year=${day.getYear}/month=${day.getMonthValue}/day=${day.getDayOfMonth}"
-    if (skipExisting && StacWrite.exists(spark, outPath)) return false
+    val day = LocalDate.parse(date)
+    if (skipExisting && isCached(spark, dest, collectionId, day)) return false
     CmrSource.spoolTo(spark, fetcher, spoolDir, pageSize)
     CmrSource.stacJsonLinks(CmrSource.entries(spark, spoolDir), protocol)
-      .select($"granule_ur", $"stac_link")
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
+      .select("granule_ur", "stac_link")
+      .write.mode(SaveMode.Overwrite).parquet(linkDayPath(dest, collectionId, day))
     true
   }
 
@@ -192,23 +227,14 @@ object StacPipeline {
       version: String = "0.1",
       requireCompleteLinks: Boolean = false,
       skipExisting: Boolean = false): Boolean = {
-    import spark.implicits._
-    // Completeness = every expected daily CACHE FILE exists (a day may
-    // legitimately hold zero granules) — the reference compares link
-    // file paths, not data rows (write.py:158-189).
+    // the reference compares link file paths, not data rows
+    // (write.py:158-189)
     if (requireCompleteLinks) {
-      val monthStart = java.time.LocalDate.of(year, month, 1)
-      val origin = StacSynth.OriginDates.get(collectionId)
-        .map(java.time.LocalDate.parse)
-      val firstDay = origin match {
-        case Some(o) if o.getYear == year && o.getMonthValue == month =>
-          o.getDayOfMonth
-        case _ => 1
-      }
-      val missing = (firstDay to monthStart.lengthOfMonth()).filterNot { d =>
-        StacWrite.exists(spark, s"${linksRoot(dest)}/collection=" +
-          s"$collectionId/year=$year/month=$month/day=$d")
-      }
+      val firstDay = StacSynth.OriginDates.get(collectionId).map(LocalDate.parse)
+        .filter(o => o.getYear == year && o.getMonthValue == month)
+        .fold(1)(_.getDayOfMonth)
+      val missing = (firstDay to YearMonth.of(year, month).lengthOfMonth())
+        .filterNot(cachedDays(spark, dest, collectionId, year, month))
       if (missing.nonEmpty) {
         throw new IllegalStateException(
           s"$collectionId $year-$month: missing daily link caches for " +
@@ -217,8 +243,8 @@ object StacPipeline {
     }
     val monthly = readMonthlyLinks(spark, dest, collectionId, year, month)
       .withColumn("collection", lit(collectionId))
-      .withColumn("url_stac", $"stac_link")
+      .withColumn("url_stac", col("stac_link"))
     StacWrite.writeMonthly(spark, monthly, dest, version, collectionId,
-      year, month, requireCompleteLinks = false, skipExisting)
+      year, month, skipExisting)
   }
 }

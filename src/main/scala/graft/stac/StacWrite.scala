@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.hilbert_index
 
-/** Monthly STAC-parquet sink (reference: write.py). Differences are
-  * deliberate scale choices, not omissions:
+/** Monthly STAC-parquet sink (reference: write.py). Every month has one
+  * layout: up to 16 files range-partitioned on the Hilbert index of the
+  * granule centroid, sorted within each file, zstd(6) GeoParquet.
+  * Differences are deliberate scale choices, not omissions:
   *   - the reference Hilbert-sorts the month's URLs in driver memory
   *     (write.py:196-211); here the spatial sort is a
   *     `repartitionByRange` + `sortWithinPartitions` on the Hilbert
@@ -16,8 +18,13 @@ import graft.functions.hilbert_index
   *   - output is a year=/month= partitioned directory of zstd parquet
   *     (constants.py:8 PARQUET_PATH_FORMAT), so downstream readers get
   *     partition pruning instead of filename conventions.
+  * Completeness is checked upstream, on the daily link caches
+  * ([[StacPipeline.writeMonthlyStacGeoparquet]]), not on the rows here.
   */
 object StacWrite {
+
+  /** Files per month: the range partitions of the Hilbert sort. */
+  private val SpatialPartitions = 16
 
   /** Layout root for one collection+version, mirroring
     * `v{version}/{collection_id}/year=…/month=…` (constants.py:8).
@@ -32,19 +39,6 @@ object StacWrite {
 
   /** Write one month of items. Returns true if written, false when
     * skipped (`skipExisting`, reference: write.py:148-151).
-    * `requireCompleteLinks` (write.py:158-189): every expected day of
-    * the month must be present in the batch, honoring the collection
-    * origin date for the origin month.
-    *
-    * File-count planning: a fixed partition count writes tiny files
-    * for sparse months and oversized files for dense ones — the
-    * small-file problem that degrades every downstream scan at scale.
-    * With `targetRowsPerFile` set, the sink counts the month (a
-    * metadata-cheap columnar count — the ONE extra pass a compaction
-    * planner is worth) and range-partitions into
-    * ceil(rows / target) ∈ [1, spatialPartitions] files, so output
-    * file sizes track data volume and `spatialPartitions` becomes the
-    * parallelism CAP instead of the unconditional file count.
     */
   def writeMonthly(
       spark: SparkSession,
@@ -54,64 +48,24 @@ object StacWrite {
       collectionId: String,
       year: Int,
       month: Int,
-      requireCompleteLinks: Boolean = false,
-      skipExisting: Boolean = false,
-      spatialPartitions: Int = 16,
-      clusterBy: String = "hilbert",
-      targetRowsPerFile: Option[Long] = None): Boolean = {
+      skipExisting: Boolean = false): Boolean = {
     import spark.implicits._
-    require(clusterBy == "hilbert" || clusterBy == "morton",
-      s"clusterBy must be 'hilbert' or 'morton', got $clusterBy")
-
     val root = parquetRoot(dest, version, collectionId)
-    val monthPath = s"$root/year=$year/month=$month"
-    if (skipExisting && exists(spark, monthPath)) return false
+    if (skipExisting && exists(spark, s"$root/year=$year/month=$month")) return false
 
     val monthStart = java.time.LocalDate.of(year, month, 1)
-    val monthly = items
+    items
       .filter($"collection" === collectionId)
       .filter(to_date($"ts") >= lit(monthStart.toString).cast("date") &&
         to_date($"ts") < lit(monthStart.plusMonths(1).toString).cast("date"))
-
-    if (requireCompleteLinks) {
-      val origin = StacSynth.OriginDates.get(collectionId)
-        .map(java.time.LocalDate.parse)
-      val firstDay = origin match {
-        case Some(o) if o.getYear == year && o.getMonthValue == month =>
-          o.getDayOfMonth
-        case _ => 1
-      }
-      val expected = (firstDay to monthStart.lengthOfMonth()).toSet
-      val present = monthly.select(dayofmonth(to_date($"ts")))
-        .distinct().as[Int].collect().toSet
-      val missing = expected -- present
-      if (missing.nonEmpty) {
-        throw new IllegalStateException(
-          s"$collectionId $year-$month: missing daily links for days " +
-            missing.toSeq.sorted.mkString(", "))
-      }
-    }
-
-    val plannedPartitions = targetRowsPerFile match {
-      case Some(target) =>
-        require(target > 0, s"targetRowsPerFile must be > 0, got $target")
-        val rows = monthly.count()
-        math.min(spatialPartitions,
-          math.max(1L, (rows + target - 1) / target)).toInt
-      case None => spatialPartitions
-    }
-    monthly
       // geoparquet geometry column (WKB point of the granule centroid)
       .withColumn("geometry", graft.functions.wkb_point($"lon", $"lat"))
       .withColumn("gx", floor(($"lon" + 180.0) / 360.0 * 16384).cast("int"))
       .withColumn("gy", floor(($"lat" + 90.0) / 180.0 * 16384).cast("int"))
-      .withColumn("cluster_key",
-        if (clusterBy == "morton")
-          graft.functions.morton_index($"gx", $"gy", 14)
-        else hilbert_index($"gx", $"gy", 14))
+      .withColumn("cluster_key", hilbert_index($"gx", $"gy", 14))
       .withColumn("year", lit(year))
       .withColumn("month", lit(month))
-      .repartitionByRange(plannedPartitions, $"cluster_key")
+      .repartitionByRange(SpatialPartitions, $"cluster_key")
       .sortWithinPartitions($"cluster_key")
       .drop("gx", "gy")
       .write

@@ -81,4 +81,27 @@ class MainSpec extends SparkSpecBase {
     assert(rc === 2)
     assert(err.toString.contains("--protocol requires a value"))
   }
+
+  /** Exit code and stderr of one CLI call. */
+  private def runErr(args: String*): (Int, String) = {
+    val err = new java.io.ByteArrayOutputStream()
+    val rc = Console.withErr(err)(Main.run(args.toArray, Some(spark)))
+    (rc, err.toString)
+  }
+
+  test("CLI rejects an unknown protocol with the reference message") {
+    val tmp = Files.createTempDirectory("graft-cli-proto").toString
+    val (rc, err) = runErr("cache-daily-links", "HLSL30", "1996-03-01", tmp,
+      "--catalog-dir", sf, "--protocol", "ftp")
+    assert(rc === 2)
+    assert(err.contains("Invalid protocol: ftp. Must be 's3' or 'https'"))
+  }
+
+  test("CLI rejects an inverted bounding box with the reference message") {
+    val tmp = Files.createTempDirectory("graft-cli-inv").toString
+    val (rc, err) = runErr("cache-daily-links", "HLSL30", "1996-03-01", tmp,
+      "--catalog-dir", sf, "--bounding-box", "100,0,60,50")
+    assert(rc === 2)
+    assert(err.contains("min_lon (100.0) must be less than max_lon (60.0)"))
+  }
 }

@@ -83,6 +83,72 @@ class StacPipelineSpec extends SparkSpecBase {
       java.nio.file.Paths.get(p2)), "UTF-8") === "[]")
   }
 
+  test("json-array daily cache escapes control characters") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val tmp = Files.createTempDirectory("graft-json-esc").toString
+    val links = Seq("https://data.example.com/a\tb_stac.json",
+      "https://data.example.com/c\n\"d\\e_stac.json")
+    val catalog = links.map(l => ("HLSS30_2.0", "1996-03-05 12:00:00", Seq(l)))
+      .toDF("collection", "ts", "links")
+      .withColumn("ts", $"ts".cast("timestamp"))
+    val path = StacPipeline.writeDailyLinksJsonArray(spark, catalog, tmp,
+      "HLSS30_2.0", "1996-03-05")
+    assert(new ObjectMapper().readValue(new java.io.File(path),
+      classOf[Array[String]]).toSeq === links.sorted)
+  }
+
+  test("completeness counts committed zero-granule days") {
+    import org.apache.spark.sql.functions._
+    val tmp = Files.createTempDirectory("graft-zero-day").toString
+    val catalog = StacSynth.catalog(spark, sf).cache()
+    val cid = "HLSS30_2.0"
+    val daysWithData = catalog.filter($"collection" === cid &&
+        date_format($"ts", "yyyy-MM") === "1996-03")
+      .select(dayofmonth($"ts")).distinct().count()
+    assert(daysWithData > 0 && daysWithData < 31,
+      s"1996-03 must mix granule and zero-granule days, has $daysWithData")
+    for (d <- 1 to 31) {
+      assert(StacPipeline.cacheDailyStacJsonLinks(spark, catalog, tmp, cid,
+        f"1996-03-$d%02d"))
+    }
+    assert(StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 1996, 3,
+      requireCompleteLinks = true))
+    val out = spark.read.parquet(s"$tmp/v0.1/$cid")
+      .filter($"year" === 1996 && $"month" === 3)
+    assert(out.count() ===
+      StacPipeline.readMonthlyLinks(spark, tmp, cid, 1996, 3).count())
+  }
+
+  test("a day whose write left only _temporary/ is not cached") {
+    val tmp = Files.createTempDirectory("graft-crashed-day").toString
+    val catalog = StacSynth.catalog(spark, sf).cache()
+    val cid = "HLSL30_2.0"
+    // the origin month (origin 1995-01-15) expects days 15..31 only
+    for (d <- 15 to 31) {
+      StacPipeline.cacheDailyStacJsonLinks(spark, catalog, tmp, cid,
+        f"1995-01-$d%02d")
+    }
+    assert(StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 1995, 1,
+      requireCompleteLinks = true))
+    // what a crashed Overwrite leaves behind
+    val day = new java.io.File(
+      s"$tmp/links/collection=$cid/year=1995/month=1/day=20")
+    org.apache.commons.io.FileUtils.deleteDirectory(day)
+    assert(new java.io.File(day, "_temporary/0").mkdirs())
+    val err = intercept[IllegalStateException] {
+      StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 1995, 1,
+        requireCompleteLinks = true)
+    }
+    assert(err.getMessage.endsWith("missing daily link caches for days 20"))
+    // skip-existing rewrites the day, which completes the month again
+    assert(StacPipeline.cacheDailyStacJsonLinks(spark, catalog, tmp, cid,
+      "1995-01-20", skipExisting = true))
+    assert(!StacPipeline.cacheDailyStacJsonLinks(spark, catalog, tmp, cid,
+      "1995-01-20", skipExisting = true))
+    assert(StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 1995, 1,
+      requireCompleteLinks = true))
+  }
+
   test("end-to-end: cache daily links for a month, then write monthly geoparquet") {
     val tmp = Files.createTempDirectory("graft-pipe").toString
     val catalog = StacSynth.catalog(spark, sf).cache()

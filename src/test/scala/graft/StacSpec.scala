@@ -58,7 +58,7 @@ class StacSpec extends SparkSpecBase {
     assert(keys.toSeq === keys.toSeq.sorted)
   }
 
-  test("writeMonthly: partitioned zstd layout, skip-existing, completeness") {
+  test("writeMonthly: partitioned zstd layout, skip-existing") {
     val tmp = Files.createTempDirectory("graft-stac").toString
     val items = StacSynth.catalog(spark, sf)
     val wrote = StacWrite.writeMonthly(spark, items, tmp, "0.1",
@@ -77,46 +77,6 @@ class StacSpec extends SparkSpecBase {
     val wrote2 = StacWrite.writeMonthly(spark, items, tmp, "0.1",
       "HLSL30_2.0", 1996, 4)
     assert(wrote2 && StacWrite.exists(spark, monthDir))
-    // incomplete month with requireCompleteLinks throws
-    val sparse = items.filter(dayofmonth(to_date($"ts")) <= 5)
-    intercept[IllegalStateException] {
-      StacWrite.writeMonthly(spark, sparse, tmp, "0.1",
-        "HLSL30_2.0", 1996, 5, requireCompleteLinks = true)
-    }
-  }
-
-  test("writeMonthly: targetRowsPerFile plans the output file count") {
-    // compaction planning: file count tracks rows/target and is capped
-    // by spatialPartitions — no more fixed-16-files-for-a-sparse-month
-    val tmp = Files.createTempDirectory("graft-compact").toString
-    val items = StacSynth.catalog(spark, sf)
-    val monthRows = items
-      .filter($"collection" === "HLSL30_2.0")
-      .filter(to_date($"ts") >= lit("1996-03-01").cast("date") &&
-        to_date($"ts") < lit("1996-04-01").cast("date"))
-      .count()
-    assert(monthRows > 4, s"fixture too small: $monthRows rows")
-    def dataFiles(dir: String): Long = {
-      val d = new java.io.File(dir)
-      Option(d.listFiles()).toSeq.flatten
-        .count(f => f.getName.endsWith(".parquet")).toLong
-    }
-    val target = (monthRows + 3) / 4 // plan → exactly 4 files
-    StacWrite.writeMonthly(spark, items, s"$tmp/a", "0.1", "HLSL30_2.0",
-      1996, 3, targetRowsPerFile = Some(target))
-    assert(dataFiles(s"$tmp/a/v0.1/HLSL30_2.0/year=1996/month=3") === 4L)
-    // a huge target collapses the month to ONE file
-    StacWrite.writeMonthly(spark, items, s"$tmp/b", "0.1", "HLSL30_2.0",
-      1996, 3, targetRowsPerFile = Some(Long.MaxValue))
-    assert(dataFiles(s"$tmp/b/v0.1/HLSL30_2.0/year=1996/month=3") === 1L)
-    // a tiny target is capped at spatialPartitions
-    StacWrite.writeMonthly(spark, items, s"$tmp/c", "0.1", "HLSL30_2.0",
-      1996, 3, spatialPartitions = 3, targetRowsPerFile = Some(1L))
-    assert(dataFiles(s"$tmp/c/v0.1/HLSL30_2.0/year=1996/month=3") === 3L)
-    // row counts are identical across plans
-    val base = spark.read.parquet(s"$tmp/b/v0.1/HLSL30_2.0").count()
-    assert(spark.read.parquet(s"$tmp/a/v0.1/HLSL30_2.0").count() === base)
-    assert(spark.read.parquet(s"$tmp/c/v0.1/HLSL30_2.0").count() === base)
   }
 
   test("wkb_point encodes the standard little-endian POINT layout") {
@@ -134,17 +94,6 @@ class StacSpec extends SparkSpecBase {
     val row = back.select("lon", "lat", "geometry").head()
     assert(java.util.Arrays.equals(row.getAs[Array[Byte]](2),
       WkbPoint.encode(row.getDouble(0), row.getDouble(1))))
-  }
-
-  test("morton clustering is an accepted writer option") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-morton").toString
-    val items = StacSynth.catalog(spark, sf)
-    assert(StacWrite.writeMonthly(spark, items, tmp, "0.1", "HLSL30_2.0",
-      1996, 3, clusterBy = "morton"))
-    intercept[IllegalArgumentException] {
-      StacWrite.writeMonthly(spark, items, tmp, "0.1", "HLSL30_2.0",
-        1996, 3, clusterBy = "zorder-typo")
-    }
   }
 
   test("monthly sink writes GeoParquet 'geo' footer with exact per-file bbox") {
@@ -204,8 +153,7 @@ class StacSpec extends SparkSpecBase {
     import graft.stac.GeoParquetRead
     val tmp = Files.createTempDirectory("graft-georead").toString
     val items = StacSynth.catalog(spark, sf)
-    StacWrite.writeMonthly(spark, items, tmp, "0.1", "HLSL30_2.0", 1996, 3,
-      spatialPartitions = 8)
+    StacWrite.writeMonthly(spark, items, tmp, "0.1", "HLSL30_2.0", 1996, 3)
     val monthDir = s"$tmp/v0.1/HLSL30_2.0/year=1996/month=3"
     val metas = GeoParquetRead.listFileGeo(spark, monthDir)
     assert(metas.nonEmpty && metas.forall(_.bbox.isDefined))
