@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.GraftBridge.{column => toCol, expression => toExpr}
 
 /** Column-level graft functions (custom Catalyst expressions exposed as
@@ -138,36 +140,28 @@ package object functions {
     */
   def once(c: Column): Column = toCol(Once(toExpr(c)))
 
-  /** Register graft functions for SQL use on this session. */
+  /** Register graft functions for SQL use on this session, once: a
+    * name the session already has is left as it is, so repeated calls
+    * neither replace nor log (the check-then-inject of a session
+    * extension).
+    */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "hilbert_index",
-      exprs => HilbertIndex(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "morton_index",
-      exprs => MortonIndex(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "minhash",
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], 0L),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "shingles3", exprs => Shingle3Distinct(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "salted_md5_minhash",
-      exprs => SaltedMd5MinHash(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "gram_md5",
-      exprs => GramMd5(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
+    def register(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name))) {
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+      }
+    register("hilbert_index",
+      exprs => HilbertIndex(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int]))
+    register("morton_index",
+      exprs => MortonIndex(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int]))
+    register("minhash",
+      exprs => MinHashSignature(exprs(0), exprs(1).eval().asInstanceOf[Int], 0L))
+    register("simhash64", exprs => SimHash64(exprs(0)))
+    register("shingles3", exprs => Shingle3Distinct(exprs(0)))
+    register("salted_md5_minhash",
+      exprs => SaltedMd5MinHash(exprs(0), exprs(1).eval().asInstanceOf[Int]))
+    register("gram_md5",
+      exprs => GramMd5(exprs(0), exprs(1).eval().asInstanceOf[Int]))
   }
 }

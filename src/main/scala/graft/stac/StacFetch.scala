@@ -1,11 +1,10 @@
 package graft.stac
 
 import java.net.URI
-import java.util.concurrent.Executors
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorCompletionService, Executors}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,10 +16,11 @@ import org.apache.spark.sql.functions._
   *   - the link set is a DataFrame, partitioned by Spark — at 100 TB
   *     the fetch parallelism is executors × `maxConcurrent`, not one
   *     process's event loop;
-  *   - within each partition a bounded thread pool replaces the
-  *     asyncio semaphore (fetch.py:51 `Semaphore(max_concurrent)`),
-  *     so per-task socket pressure is capped no matter how large the
-  *     partition is;
+  *   - within each partition a bounded thread pool and a sliding
+  *     window of `maxConcurrent` pending gets replace the asyncio
+  *     semaphore (fetch.py:51 `Semaphore(max_concurrent)`): a finished
+  *     get frees its slot at once, and per-task socket pressure and
+  *     held bodies are capped no matter how large the partition is;
   *   - one transport connection per (scheme, netloc) per partition
   *     mirrors the store-per-netloc reuse of fetch.py:33–49;
   *   - failures become ROWS (url + error), not exceptions — the
@@ -46,7 +46,8 @@ object StacFetch {
 
   /** Fetch every `urlCol` of `links`. Returns one row per input link:
     * (url, body, error) — exactly one of body/error is null. Bounded
-    * by `maxConcurrent` in-flight requests per partition.
+    * by `maxConcurrent` in-flight requests per partition; rows come
+    * out in completion order, not input order.
     */
   def fetchRaw(links: DataFrame, urlCol: String, transport: Transport,
                maxConcurrent: Int = 50): DataFrame = {
@@ -56,54 +57,65 @@ object StacFetch {
     val urls: Dataset[String] = links.select(col(urlCol).cast("string")).as[String]
     urls.mapPartitions { part =>
       if (part.isEmpty) Iterator.empty
-      else {
-        val stores =
-          scala.collection.mutable.Map.empty[(String, String), String => Array[Byte]]
-        val pool = Executors.newFixedThreadPool(maxConcurrent)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        // the returned iterator is lazy — release the pool when the
-        // task ends (fully consumed, limited, or failed), not before
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null) {
-          tc.addTaskCompletionListener[Unit](_ => pool.shutdown())
-        }
-        // store creation is sequential and lazy (first link wins),
-        // the gets themselves fan out on the bounded pool. Futures
-        // are launched and awaited in maxConcurrent-sized WINDOWS so
-        // per-partition memory is O(one window of bodies), not
-        // O(partition bytes) — the pool is window-sized anyway, so
-        // windowing costs no concurrency, only cross-window
-        // pipelining. `grouped` on the iterator is lazy: a window's
-        // gets start only when the downstream consumer reaches it.
-          part.grouped(maxConcurrent).flatMap { window =>
-            val futures = window.map { url =>
-              val getter =
-                try {
-                  val u = new URI(url)
-                  Right(stores.getOrElseUpdate(
-                    (u.getScheme, u.getAuthority),
-                    transport.open(u.getScheme, u.getAuthority)))
-                } catch { case e: Exception => Left(e) }
-              getter match {
-                case Left(e) => Future.successful(
-                  (url, null: String, s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-                case Right(get) => Future {
-                  try {
-                    (url, new String(get(url), java.nio.charset.StandardCharsets.UTF_8),
-                      null: String)
-                  } catch {
-                    case e: Exception =>
-                      (url, null: String,
-                        s"${e.getClass.getSimpleName}: ${e.getMessage}")
-                  }
-                }
-              }
-            }
-            futures.map(f => Await.result(f, Duration.Inf))
-          } ++ { pool.shutdown(); Iterator.empty }
-      }
+      else new SlidingFetch(part, transport, maxConcurrent)
     }.toDF("url", "body", "error")
+  }
+
+  /** One partition's gets as a sliding window, the semaphore of
+    * fetch.py:51: up to `maxConcurrent` gets are pending (running, or
+    * done and not yet emitted), and each emitted result frees its slot
+    * for the next link at once, so a slow get holds up no other. The
+    * pending bound is also the memory bound: at most `maxConcurrent`
+    * bodies are held per partition. Results leave in completion order;
+    * nothing downstream reads row order (the monthly write range-sorts
+    * on the Hilbert key). Links are pulled lazily, so a limited
+    * consumer fetches little more than it reads. Store creation runs on
+    * the task thread (first link of a netloc wins); the gets run on
+    * the partition's bounded pool, shut down when the links run out or
+    * the task ends, whichever is first.
+    */
+  private final class SlidingFetch(urls: Iterator[String], transport: Transport,
+                                   maxConcurrent: Int)
+      extends Iterator[(String, String, String)] {
+    private val stores =
+      scala.collection.mutable.Map.empty[(String, String), String => Array[Byte]]
+    private val pool = Executors.newFixedThreadPool(maxConcurrent)
+    private val done = new ExecutorCompletionService[(String, String, String)](pool)
+    private var pending = 0
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => pool.shutdown()))
+
+    private def submit(url: String): Unit = {
+      val getter =
+        try {
+          val u = new URI(url)
+          Right(stores.getOrElseUpdate((u.getScheme, u.getAuthority),
+            transport.open(u.getScheme, u.getAuthority)))
+        } catch { case e: Exception => Left(e) }
+      done.submit { () =>
+        getter match {
+          case Left(e) => failure(url, e)
+          case Right(get) =>
+            try (url, new String(get(url), StandardCharsets.UTF_8), null: String)
+            catch { case e: Exception => failure(url, e) }
+        }
+      }
+      pending += 1
+    }
+
+    private def failure(url: String, e: Exception) =
+      (url, null: String, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+
+    def hasNext: Boolean = {
+      while (pending < maxConcurrent && urls.hasNext) submit(urls.next())
+      if (pending == 0) pool.shutdown()
+      pending > 0
+    }
+
+    def next(): (String, String, String) = {
+      if (!hasNext) throw new NoSuchElementException("no link left to fetch")
+      pending -= 1
+      done.take().get()
+    }
   }
 
   /** The reference's (successful_items, failed_links) pair
@@ -179,9 +191,11 @@ object StacFetch {
       StructField("properties",
         StructType(Seq(
           StructField("datetime", StringType),
-          StructField("eo:cloud_cover", LongType),
-          StructField("view:sun_azimuth", LongType),
-          StructField("view:sun_elevation", LongType)))),
+          // STAC properties are JSON numbers: a LongType field reads
+          // a fractional value as NULL
+          StructField("eo:cloud_cover", DoubleType),
+          StructField("view:sun_azimuth", DoubleType),
+          StructField("view:sun_elevation", DoubleType)))),
       StructField("grid", StructType(Seq(
         StructField("lon10", LongType), StructField("lat10", LongType)))),
       StructField("assets", MapType(StringType,

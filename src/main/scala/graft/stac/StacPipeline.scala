@@ -199,7 +199,9 @@ object StacPipeline {
     * separated — see [[StacFetch]]), write the successful items as
     * monthly geoparquet, and RETURN the failed links (url, error) for
     * accounting/retry — the (items, failed) contract of
-    * fetch.py:78–88.
+    * fetch.py:78–88. The fetch cache is released before the verb
+    * returns; the failed side comes back materialized (it is
+    * failure-sized), so counting it fetches nothing again.
     */
   def fetchAndWriteMonthly(
       spark: SparkSession,
@@ -211,11 +213,12 @@ object StacPipeline {
       version: String = "0.1",
       maxConcurrent: Int = 50): DataFrame = {
     val links = readMonthlyLinks(spark, dest, collectionId, year, month)
-    val (items, failed) =
-      StacFetch.fetchItems(links, "stac_link", transport, maxConcurrent)
-    StacWrite.writeMonthly(spark, items, dest, version, collectionId,
-      year, month)
-    failed
+    StacFetch.fetchItemsScoped(links, "stac_link", transport, maxConcurrent) {
+      (items, failed) =>
+        StacWrite.writeMonthly(spark, items, dest, version, collectionId,
+          year, month)
+        spark.createDataFrame(failed.collectAsList(), failed.schema)
+    }
   }
 
   def writeMonthlyStacGeoparquet(

@@ -38,7 +38,10 @@ object StacWrite {
   }
 
   /** Write one month of items. Returns true if written, false when
-    * skipped (`skipExisting`, reference: write.py:148-151).
+    * skipped (`skipExisting`, reference: write.py:148-151). Every
+    * column of `items` is written; from the fetch path that includes
+    * the item properties `cloud_cover`, `sun_azimuth` and
+    * `sun_elevation` as doubles.
     */
   def writeMonthly(
       spark: SparkSession,

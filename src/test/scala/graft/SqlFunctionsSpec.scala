@@ -20,6 +20,22 @@ class SqlFunctionsSpec extends SparkSpecBase {
     assert(r.getSeq[Long](5).length === 4)
   }
 
+  test("a second prepare leaves the registered functions as they are") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("hilbert_index")
+    // a capture-free builder lambda is one object however often it is
+    // made, so the ExpressionInfo made with each registration is what
+    // shows a replacement
+    def registered() = (registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get)
+    GraftSession.prepare(spark)
+    val (info, builder) = registered()
+    GraftSession.prepare(spark)
+    val (info2, builder2) = registered()
+    assert((info2 eq info) && (builder2 eq builder),
+      "prepare must not replace a registered function")
+  }
+
   test("porter_stem expression ≡ PorterStemmer.stem through the codegen path") {
     import spark.implicits._
     val words = Seq("caresses", "ponies", "relational",

@@ -42,6 +42,7 @@ class FlakyTransport(bodies: Map[String, String], flaky: Set[String],
 }
 
 class StacPipelineSpec extends SparkSpecBase {
+  import scala.jdk.CollectionConverters._
   import spark.implicits._
 
   test("dateRange: origin-date default, yesterday default, validation") {
@@ -304,17 +305,8 @@ class StacPipelineSpec extends SparkSpecBase {
   test("end-to-end with fetch: link cache → fetch → monthly geoparquet + failed") {
     val tmp = Files.createTempDirectory("graft-fetch-pipe").toString
     val catalog = StacSynth.catalog(spark, sf).cache()
-    val cid = "HLSL30_2.0"
-    val days = catalog
-      .filter($"collection" === cid)
-      .filter(org.apache.spark.sql.functions.date_format($"ts", "yyyy-MM") === "1996-03")
-      .select(org.apache.spark.sql.functions.dayofmonth($"ts"))
-      .distinct().as[Int].collect().sorted
-    assert(days.nonEmpty)
-    for (d <- days) {
-      StacPipeline.cacheDailyStacJsonLinks(spark, catalog, tmp, cid,
-        f"1996-03-$d%02d")
-    }
+    val cid = MonthCid
+    cacheMonthLinks(catalog, tmp)
     val bodies = catalog.select($"url_stac", $"item_json").as[(String, String)]
       .collect().toMap
     val failUrls = catalog.filter($"fetch_failed")
@@ -350,71 +342,166 @@ class StacPipelineSpec extends SparkSpecBase {
         $"sun_elevation" =!= $"c_el").count() === 0)
   }
 
-  test("fetch windows bound per-partition memory: window w starts only after window w-1 completes") {
-    import org.apache.spark.sql.functions._
-    import scala.jdk.CollectionConverters._
-    val catalog = StacSynth.catalog(spark, sf).cache()
-    val bodies = catalog.select($"url_stac", $"item_json").as[(String, String)]
-      .collect().toMap
-    val links = catalog.select($"url_stac".as("stac_link"))
-      .limit(40).repartition(2)
-    WindowProbeTransport.reset()
+  test("fetch window bounds per-partition memory: started gets minus emitted rows <= maxConcurrent") {
+    val bodies = catalogBodies()
+    val links = bodies.keys.toSeq.sorted.take(40).toDF("stac_link").repartition(2)
+    FetchProbe.reset()
     val mc = 4
     val raw = StacFetch.fetchRaw(links, "stac_link",
-      new WindowProbeTransport(bodies), maxConcurrent = mc)
-    assert(raw.count() === 40)
-    // For each partition, the j-th get to START (0-based) must observe
-    // at least floor(j/mc)*mc COMPLETED gets in its partition: awaiting
-    // in windows means a new window launches only after the previous
-    // one fully finished (the whole-partition materialization this
-    // replaces submits everything up front, so the (mc+1)-th start
-    // would observe ~1 completion, not mc).
-    val byPart = WindowProbeTransport.observations.asScala.toSeq
-      .groupBy(_._1).values
-    assert(byPart.nonEmpty)
-    byPart.foreach { obs =>
-      obs.sortBy(_._2).zipWithIndex.foreach { case ((_, _, doneAtStart), j) =>
-        assert(doneAtStart >= (j / mc) * mc,
-          s"get #$j started with only $doneAtStart completed; " +
-            s"window semantics require >= ${(j / mc) * mc}")
+      new FetchProbeTransport(bodies, slowMs = 0), maxConcurrent = mc)
+    // the counting pass: each row the fetch hands downstream
+    val rows = raw.as[(String, String, String)].mapPartitions { it =>
+      val p = org.apache.spark.TaskContext.getPartitionId()
+      it.map { r => FetchProbe.onEmit(p); r }
+    }.count()
+    assert(rows === 40)
+    val gets = FetchProbe.gets.asScala.toSeq
+    assert(gets.size === 40, "each link is fetched once")
+    // running gets plus results not yet emitted hold at most one window
+    // of bodies: no get may start while maxConcurrent are outstanding
+    gets.foreach { g =>
+      assert(g.startedSoFar - g.emittedAtStart <= mc,
+        s"partition ${g.partition}: get #${g.startedSoFar} started with only " +
+          s"${g.emittedAtStart} rows emitted (bound $mc)")
+    }
+  }
+
+  test("fetch window: a slow get does not hold up the gets after it") {
+    val bodies = catalogBodies()
+    val links = bodies.keys.toSeq.sorted.take(40).toDF("stac_link").coalesce(1)
+    FetchProbe.reset()
+    val raw = StacFetch.fetchRaw(links, "stac_link",
+      new FetchProbeTransport(bodies, slowMs = 400), maxConcurrent = 4)
+    assert(raw.filter($"error".isNull).count() === 40)
+    val (slow, rest) = FetchProbe.gets.asScala.toSeq.partition(_.slow)
+    assert(slow.size === 1 && rest.size === 39)
+    // the other 39 gets share the remaining 3 slots; a window barrier
+    // would start the 5th get only after the slow one completes
+    val late = rest.filter(_.startNs >= slow.head.endNs)
+    assert(late.isEmpty,
+      s"${late.size} gets started only after the slow get completed")
+  }
+
+  test("fetchAndWriteMonthly releases its fetch cache and fetches each link once") {
+    val tmp = Files.createTempDirectory("graft-fetch-release").toString
+    val catalog = StacSynth.catalog(spark, sf)
+    val links = cacheMonthLinks(catalog, tmp)
+    val bodies = catalogBodies()
+    val dead = links.toSeq.sorted.take(2).toSet
+    // start from a session that holds no persisted RDD
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    FlakyTransport.seen.clear()
+    val failed = StacPipeline.fetchAndWriteMonthly(spark, tmp, MonthCid, 1996, 3,
+      new FlakyTransport(bodies, Set.empty, dead))
+    assert(failed.count() === dead.size)
+    assert(failed.select($"url").as[String].collect().toSet === dead)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "the verb must release the fetch cache it made")
+    assert(FlakyTransport.seen.asScala.toMap.map { case (u, n) => u -> n.intValue } ===
+      links.map(_ -> 1).toMap, "each link is fetched exactly once")
+  }
+
+  test("fractional STAC properties round-trip to the monthly GeoParquet; integer ones still parse") {
+    val tmp = Files.createTempDirectory("graft-fetch-frac").toString
+    val catalog = StacSynth.catalog(spark, sf).cache()
+    val links = cacheMonthLinks(catalog, tmp).toSeq.sorted
+    val fractional = links.zipWithIndex.collect { case (u, i) if i % 2 == 0 => u }.toSet
+    assert(fractional.nonEmpty && fractional.size < links.size)
+    val props = catalog.select($"url_stac", $"cloud_cover", $"sun_azimuth",
+        $"sun_elevation").as[(String, Long, Long, Long)]
+      .collect().map(r => r._1 -> Seq(r._2, r._3, r._4)).toMap
+    // a fractional body carries "<n>.25"-style values where the
+    // catalog has the integer n
+    val suffix = Seq(".25", ".36", ".5")
+    val keys = Seq("eo:cloud_cover", "view:sun_azimuth", "view:sun_elevation")
+    val bodies = catalogBodies().map { case (u, body) =>
+      u -> (if (!fractional(u)) body else keys.zip(suffix).foldLeft(body) {
+        case (b, (k, frac)) => b.replaceFirst("(\"" + k + "\": )(\\d+)", "$1$2" + frac)
+      })
+    }
+    val failed = StacPipeline.fetchAndWriteMonthly(spark, tmp, MonthCid, 1996, 3,
+      new MockTransport(bodies, Set.empty))
+    assert(failed.count() === 0)
+    val out = spark.read.parquet(s"$tmp/v0.1/$MonthCid")
+      .filter($"year" === 1996 && $"month" === 3)
+      .select($"url_stac", $"cloud_cover", $"sun_azimuth", $"sun_elevation")
+      .as[(String, Option[Double], Option[Double], Option[Double])].collect()
+    assert(out.map(_._1).toSet === links.toSet)
+    out.foreach { case (u, cc, az, el) =>
+      val want = props(u).zip(suffix).map { case (n, frac) =>
+        if (fractional(u)) s"$n$frac".toDouble else n.toDouble
       }
+      assert(Seq(cc, az, el) === want.map(Some(_)), s"properties of $u")
+    }
+  }
+
+  private val MonthCid = "HLSL30_2.0"
+
+  /** Caches the daily links of `MonthCid`'s 1996-03 under `dest`, one
+    * call per catalog day, and returns the month's links.
+    */
+  private def cacheMonthLinks(catalog: org.apache.spark.sql.DataFrame,
+                              dest: String): Set[String] = {
+    import org.apache.spark.sql.functions._
+    val days = catalog.filter($"collection" === MonthCid)
+      .filter(date_format($"ts", "yyyy-MM") === "1996-03")
+      .select(dayofmonth($"ts")).distinct().as[Int].collect().sorted
+    assert(days.nonEmpty)
+    days.foreach(d => StacPipeline.cacheDailyStacJsonLinks(spark, catalog, dest,
+      MonthCid, f"1996-03-$d%02d"))
+    StacPipeline.readMonthlyLinks(spark, dest, MonthCid, 1996, 3)
+      .select($"stac_link").as[String].collect().toSet
+  }
+
+  private def catalogBodies(): Map[String, String] =
+    StacSynth.catalog(spark, sf).select($"url_stac", $"item_json")
+      .as[(String, String)].collect().toMap
+}
+
+/** Per-get records of [[FetchProbeTransport]]: when each get started
+  * and ended, how many gets of its partition had started by then
+  * (itself included), and how many rows the partition had already
+  * emitted downstream ([[onEmit]], called by the spec's counting pass).
+  */
+object FetchProbe {
+  import java.util.concurrent.atomic.AtomicInteger
+  import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+  final case class Get(partition: Int, startedSoFar: Int, emittedAtStart: Int,
+                       startNs: Long, endNs: Long, slow: Boolean)
+  val gets = new ConcurrentLinkedQueue[Get]()
+  private val started = new ConcurrentHashMap[Int, AtomicInteger]()
+  private val emitted = new ConcurrentHashMap[Int, AtomicInteger]()
+  private val firstGet = new AtomicInteger(0)
+  def reset(): Unit = {
+    gets.clear(); started.clear(); emitted.clear(); firstGet.set(0)
+  }
+  private def ctr(m: ConcurrentHashMap[Int, AtomicInteger], p: Int) =
+    m.computeIfAbsent(p, _ => new AtomicInteger(0))
+  def onEmit(p: Int): Unit = { ctr(emitted, p).incrementAndGet(); () }
+  /** Runs one get; the first get of the JVM since [[reset]] sleeps `slowMs`. */
+  def get[T](p: Int, slowMs: Long)(body: => T): T = {
+    val startedSoFar = ctr(started, p).incrementAndGet()
+    val emittedAtStart = ctr(emitted, p).get()
+    val t0 = System.nanoTime()
+    val slow = slowMs > 0 && firstGet.getAndIncrement() == 0
+    try {
+      Thread.sleep(if (slow) slowMs else 1) // 1 ms widens the interleaving
+      body
+    } finally {
+      gets.add(Get(p, startedSoFar, emittedAtStart, t0, System.nanoTime(), slow))
     }
   }
 }
 
-/** Records, per partition, each get's start ordinal and how many gets
-  * of that partition had COMPLETED when it started — the observable
-  * that distinguishes windowed awaits from whole-partition fan-out.
-  */
-object WindowProbeTransport {
-  import java.util.concurrent.atomic.AtomicInteger
-  import java.util.concurrent.ConcurrentHashMap
-  val started = new ConcurrentHashMap[Int, AtomicInteger]()
-  val done = new ConcurrentHashMap[Int, AtomicInteger]()
-  // (partitionId, startOrdinal, completedAtStart)
-  val observations =
-    new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Int)]()
-  def reset(): Unit = { started.clear(); done.clear(); observations.clear() }
-  private def ctr(m: ConcurrentHashMap[Int, AtomicInteger], p: Int) =
-    m.computeIfAbsent(p, _ => new AtomicInteger(0))
-  def onStart(p: Int): Unit =
-    observations.add((p, ctr(started, p).getAndIncrement(), ctr(done, p).get()))
-  def onDone(p: Int): Unit = { ctr(done, p).incrementAndGet(); () }
-}
-
-class WindowProbeTransport(bodies: Map[String, String])
+class FetchProbeTransport(bodies: Map[String, String], slowMs: Long)
     extends StacFetch.Transport {
   def open(scheme: String, netloc: String): String => Array[Byte] = {
     // `open` runs on the task thread (store creation is sequential);
     // the gets run on pool threads with no TaskContext, so the
     // partition id must be captured HERE
     val p = org.apache.spark.TaskContext.getPartitionId()
-    url => {
-      WindowProbeTransport.onStart(p)
-      try {
-        Thread.sleep(1) // widen the start/completion interleaving window
-        bodies(url).getBytes("UTF-8")
-      } finally WindowProbeTransport.onDone(p)
-    }
+    url => FetchProbe.get(p, slowMs)(bodies(url).getBytes("UTF-8"))
   }
 }
